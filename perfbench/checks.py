@@ -72,9 +72,12 @@ def _recompute_sql(lake: str, name: str, columns: list[str]) -> tuple[str, list[
     return sql, cols
 
 
-def check_lake(lake: str, exp: Expected, sync_height: int) -> list[str]:
-    """Tip height, history row counts, and every inventory against its
-    batch recompute."""
+def check_lake(lake: str, exp: Expected, sync_height: int, stats: list[dict]) -> list[str]:
+    """Tip height, history row counts, every transaction_actors row, every
+    inventory against its batch recompute, and ``stats`` (the program's
+    ``stats_inventory`` rows) against the inventories' row counts."""
+    import pyarrow as pa
+
     errs = []
     con = duckdb.connect()
     try:
@@ -87,11 +90,25 @@ def check_lake(lake: str, exp: Expected, sync_height: int) -> list[str]:
             n = con.execute(f"SELECT count(*) FROM {history_sql(lake, t)}").fetchone()[0]
             if n != exp.rows[t]:
                 errs.append(f"{t}: {n} rows, generator made {exp.rows[t]}")
+        want = pa.Table.from_pylist(
+            [dict(zip(("actor", "actor_role", "transaction_hash", "block"), r)) for r in exp.actor_rows]
+        )
+        con.register("expected_actors", want)
+        c = "actor, actor_role, transaction_hash, block"
+        got = history_sql(lake, "transaction_actors")
+        diff = con.execute(
+            f"""SELECT (SELECT count(*) FROM (SELECT {c} FROM {got} EXCEPT ALL SELECT {c} FROM expected_actors)),
+                       (SELECT count(*) FROM (SELECT {c} FROM expected_actors EXCEPT ALL SELECT {c} FROM {got}))"""
+        ).fetchone()
+        if diff != (0, 0):
+            errs.append(f"transaction_actors differs from the generator: {diff[0]} extra, {diff[1]} missing rows")
+        counts = {}
         for name in INVENTORIES:
             if inventory_dir(lake, name) is None:
                 errs.append(f"{name}_inventory missing")
                 continue
             inv = inventory_sql(lake, name)
+            counts[f"{name}_inventory"] = con.execute(f"SELECT count(*) FROM {inv}").fetchone()[0]
             columns = [r[0] for r in con.execute(f"DESCRIBE SELECT * FROM {inv}").fetchall()]
             rec, cols = _recompute_sql(lake, name, columns)
             c = ", ".join(cols)
@@ -101,6 +118,9 @@ def check_lake(lake: str, exp: Expected, sync_height: int) -> list[str]:
             ).fetchone()
             if diff != (0, 0):
                 errs.append(f"{name}_inventory differs from recompute: {diff[0]} extra, {diff[1]} missing rows")
+        got_stats = {r["name"]: r["value"] for r in stats}
+        if got_stats != counts:
+            errs.append(f"stats_inventory {got_stats} != inventory row counts {counts}")
     finally:
         con.close()
     return errs
@@ -151,9 +171,15 @@ def check_answers(lake: str, answers: list) -> list[str]:
         for name in ("transactions", "transaction_actors", "rewards"):
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM {history_sql(lake, name)}")
         con.execute(f"CREATE VIEW gateway_inventory AS SELECT * EXCLUDE (hash, time) FROM {inventory_sql(lake, 'gateways')}")
+        stats = [
+            {"name": f"{n}_inventory", "value": con.execute(f"SELECT count(*) FROM {inventory_sql(lake, n)}").fetchone()[0]}
+            for n in INVENTORIES
+        ]
         for req, got in answers:
             kind = req["kind"]
-            if kind == "lookup":
+            if kind == "stats":
+                ok = _same(got, stats)
+            elif kind == "lookup":
                 ok = _same(got, _rows(con, "SELECT * FROM gateway_inventory WHERE address = ?", [req["gateway"]]))
             elif kind == "rewards":
                 want = _rows(

@@ -13,8 +13,8 @@ import statistics
 from spans import COUNTERS, spark_counters
 
 MERGE_TARGETS = ("accounts", "gateways", "validators", "ouis", "vars", "oracle_prices")
-API_KINDS = ("lookup", "activity", "rewards", "sql")
-LAYERS = ("sources", "ingest", "write", "merge", "activity", "bench")
+API_KINDS = ("lookup", "activity", "rewards", "stats", "sql")
+LAYERS = ("sources", "ingest", "write", "merge", "cdc", "activity", "bench")
 # history tables whose rows a batch folds into the inventories
 UPDATE_TABLES = ("transaction_actors", "gateways", "validators", "ouis", "vars", "oracle_prices")
 
@@ -52,12 +52,17 @@ def per_layer(w, tracer, trace_dir: str, e2e: dict) -> dict[str, tuple[float, st
         desc = tracer.descendants(b, kids)
         writes = [d for d in desc if d.name == "write.parquet"]
         direct = [d for d in writes if d.parent == b.id]
-        merges = [d for d in desc if d.name == "merge.merge_with"]
+        # inventory merges; the stats views' own merges count under cdc
+        merges = [d for d in desc if d.name == "merge.merge_with" and d.attrs["target"].endswith("_inventory")]
         merge_ids = {d.id for d in merges}
+        # a merge writes the new state, then its CDC changelog segment
+        changelogs = [d for d in writes if d.parent in merge_ids and "/changelog/" in d.attrs["path"]]
         # rows the batch folds in (its entity-history partials and actor
         # rows) against rows the merges write back as the new state
         updates = sum(d.attrs["rows"] for d in direct if d.attrs["path"].split("/")[-2] in UPDATE_TABLES)
-        rewritten = sum(d.attrs["rows"] for d in writes if d.parent in merge_ids)
+        rewritten = sum(d.attrs["rows"] for d in writes if d.parent in merge_ids) - sum(
+            d.attrs["rows"] for d in changelogs
+        )
         per_batch.append(
             {
                 "self": tracer.self_time(b, kids),
@@ -68,6 +73,8 @@ def per_layer(w, tracer, trace_dir: str, e2e: dict) -> dict[str, tuple[float, st
                 "calls": len(merges),
                 "rewritten": rewritten,
                 "ratio": updates / rewritten if rewritten else 0.0,
+                "catch_up": sum(d.end - d.start for d in desc if d.name == "cdc.catch_up"),
+                "changelog_rows": sum(d.attrs["rows"] for d in changelogs),
                 **{
                     f"t_{t}": sum(d.end - d.start for d in merges if d.attrs["target"] == f"{t}_inventory")
                     for t in MERGE_TARGETS
@@ -88,6 +95,8 @@ def per_layer(w, tracer, trace_dir: str, e2e: dict) -> dict[str, tuple[float, st
     m["merge.calls_per_batch"] = (pb("calls"), "count")
     m["merge.state_rows_rewritten"] = (pb("rewritten"), "count")
     m["merge.update_rows_per_rewritten_row"] = (pb("ratio"), "ratio")
+    m["cdc.catch_up_s"] = (pb("catch_up"), "s")
+    m["cdc.changelog_rows"] = (pb("changelog_rows"), "count")
 
     compacts = [s for s in spans if s.name == "bench.compact"]
     compact_writes = [d for c in compacts for d in tracer.descendants(c, kids) if d.name == "write.parquet"]

@@ -1,5 +1,5 @@
 """Tracing overhead: run one workload untraced and traced on the same seed
-and print, for each end-to-end and wall-clock figure, traced minus
+and print, for each end-to-end metric and side figure, traced minus
 untraced.
 
     python3 perfbench/overhead.py --workload tip_follow --seed 1 --seconds 5
@@ -15,8 +15,8 @@ import re
 import subprocess
 import sys
 
-# the wall-clock figures an untraced run prints on standard error
-_WALL = re.compile(r"^(op_p50_ms|items_per_s): ([0-9.]+) (\S+)$", re.M)
+# the side figures an untraced run prints on standard error
+_SIDE = re.compile(r"^([a-z0-9_]+): ([0-9.]+) (\S+)$", re.M)
 
 
 def run(workload: str, seed: int, seconds: float, trace: int) -> dict:
@@ -26,7 +26,7 @@ def run(workload: str, seed: int, seconds: float, trace: int) -> dict:
         check=True, capture_output=True, text=True,
     )
     metrics = json.loads(p.stdout.strip().splitlines()[-1])["metrics"]
-    for name, value, unit in _WALL.findall(p.stderr):
+    for name, value, unit in _SIDE.findall(p.stderr):
         metrics[name] = {"value": float(value), "unit": unit}
     return metrics
 

@@ -19,7 +19,6 @@ import shutil
 import signal
 import statistics
 import sys
-import threading
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
@@ -47,50 +46,18 @@ def prepare_env(work: str, trace_dir: str | None) -> None:
     env["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     env["SPARK_GRAFT_WAREHOUSE"] = os.path.join(work, "warehouse")
     env["TMPDIR"] = os.path.join(work, "tmp")
-    # -XX:-UsePerfData: no hsperfdata files under /tmp from either JVM
+    # -XX:-UsePerfData: no hsperfdata files under /tmp from either JVM;
+    # -XX:-UseDynamicNumberOfCompilerThreads: JIT threads live as long as
+    # the JVM, so their CPU time can be read per thread (procs.tree_cpu_s)
     env["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     conf = {
-        "spark.driver.extraJavaOptions": f"-XX:-UsePerfData -Djava.io.tmpdir={env['TMPDIR']} -Dderby.system.home={work}"
+        "spark.driver.extraJavaOptions": f"-XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads -Djava.io.tmpdir={env['TMPDIR']} -Dderby.system.home={work}"
     }
     if trace_dir is not None:
         from spans import event_log_conf
 
         conf |= event_log_conf(os.path.join(trace_dir, "eventlog"))
     env["PYSPARK_SUBMIT_ARGS"] = " ".join(f"--conf {k}='{v}'" for k, v in conf.items()) + " pyspark-shell"
-
-
-class RssSampler:
-    """Peak resident memory of this process plus the Spark JVM it
-    launched, sampled from /proc every 50 ms."""
-
-    def __init__(self):
-        self.peak = 0
-        self._pids = [os.getpid()]
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    def add(self, pid: int) -> None:
-        self._pids.append(pid)
-
-    @staticmethod
-    def _rss(pid: int) -> int:
-        try:
-            with open(f"/proc/{pid}/statm") as f:
-                return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
-        except (OSError, ValueError, IndexError):
-            return 0
-
-    def _run(self) -> None:
-        while not self._stop.wait(0.05):
-            self.peak = max(self.peak, sum(self._rss(p) for p in list(self._pids)))
-
-    def __enter__(self):
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join()
 
 
 def end_to_end(w, rss_peak: int) -> dict[str, tuple[float, str]]:
@@ -106,12 +73,17 @@ def end_to_end(w, rss_peak: int) -> dict[str, tuple[float, str]]:
     }
 
 
-def wall_clock(w) -> dict[str, tuple[float, str]]:
-    """Latency and throughput of the timed phase. Not end-to-end metrics:
-    on a host whose CPUs are shared with other guests they move with the
-    host's load far more than the bounds allow (see README.md)."""
+def side_figures(w) -> dict[str, tuple[float, str]]:
+    """Figures reported beside the end-to-end metrics. Wall time of
+    set-up, latency and throughput of the timed phase: on a host whose CPUs
+    are shared with other guests they move with the host's load far more
+    than the bounds allow (see README.md). JIT compilation CPU time, which
+    ``cpu_ms_per_op`` leaves out."""
     r = w.res
     return {
+        "setup_wall_s": (r.setup_wall_s, "s"),
+        "setup_jit_s": (r.setup_jit_s, "s"),
+        "jit_ms_per_op": (r.jit_s * 1000 / r.attempted, "ms"),
         "op_p50_ms": (statistics.median(r.op_ms), "ms"),
         "items_per_s": (r.items / r.busy_s, "1/s"),
     }
@@ -134,6 +106,7 @@ def main(argv=None) -> int:
     shutil.rmtree(work, ignore_errors=True)
     prepare_env(work, trace_dir)
 
+    from procs import RssSampler
     from spans import Tracer
 
     # a terminated run still stops Spark and removes its scratch state
@@ -143,13 +116,12 @@ def main(argv=None) -> int:
     w = WORKLOADS[args.workload](work, args.seed, args.seconds, tracer)
     try:
         with RssSampler() as rss:
-            _watch_jvm(rss)
             w.run()
         if args.trace:
             import layers
 
             tracer.dump(os.path.join(trace_dir, "spans.jsonl"))
-            metrics = layers.per_layer(w, tracer, trace_dir, end_to_end(w, rss.peak) | wall_clock(w))
+            metrics = layers.per_layer(w, tracer, trace_dir, end_to_end(w, rss.peak) | side_figures(w))
         else:
             metrics = end_to_end(w, rss.peak)
     finally:
@@ -158,7 +130,7 @@ def main(argv=None) -> int:
         shutil.rmtree(work, ignore_errors=True)
     for e in w.res.errors:
         print("check failed:", e, file=sys.stderr)
-    for k, (v, u) in wall_clock(w).items():
+    for k, (v, u) in side_figures(w).items():
         print(f"{k}: {v:.4f} {u}", file=sys.stderr)
     print(f"host CPU steal during the timed phase: {w.res.steal_pct:.0f}%", file=sys.stderr)
     print(
@@ -172,20 +144,6 @@ def main(argv=None) -> int:
         )
     )
     return 0
-
-
-def _watch_jvm(rss: RssSampler) -> None:
-    """Add the JVM to the sampled processes as soon as it is launched."""
-    import pyspark.core.context as ctx
-
-    launch = ctx.launch_gateway
-
-    def launched(*a, **k):
-        gw = launch(*a, **k)
-        rss.add(gw.proc.pid)
-        return gw
-
-    ctx.launch_gateway = launched
 
 
 def _stop_spark() -> None:

@@ -80,7 +80,7 @@ class Tracer:
     def install(self) -> None:
         from pyspark.sql import DataFrameWriter
 
-        from blockchain_etl_spark.operators import activity, merge
+        from blockchain_etl_spark.operators import activity, cdc_view, merge
         from blockchain_etl_spark.streaming import ingest
 
         BI = ingest.BlockIngest
@@ -92,11 +92,13 @@ class Tracer:
         self._wrap(BI, "compact", "ingest.compact", "ingest")
         self._wrap(BI, "read_table", "ingest.read_table", "ingest")
         self._wrap(BI, "read_inventory", "ingest.read_inventory", "ingest")
+        self._wrap(BI, "stats_inventory", "ingest.stats_inventory", "ingest")
         self._wrap(ingest, "derive_tables", "ingest.derive_tables", "ingest")
         self._wrap(
             merge.ParquetMergeTarget, "merge_with", "merge.merge_with", "merge",
             on_exit=lambda s, a, k: s.attrs.update(target=os.path.basename(a[0].path)),
         )
+        self._wrap(cdc_view.ChangelogAggregateView, "catch_up", "cdc.catch_up", "cdc")
         self._wrap(activity, "actor_activity", "activity.actor_activity", "activity")
         self._wrap(DataFrameWriter, "parquet", "write.parquet", "write", on_exit=_record_write)
 

@@ -3,9 +3,11 @@ timed phase for ``seconds``, and leaves the lake for the output checks.
 
 Every call into the program goes through its public entry points:
 ``session.get_spark``, ``BlockIngest`` (``run_blockfiles_stream``,
-``run_stream``, ``compact``, ``read_table``, ``read_inventory``) and
-``operators.activity.actor_activity``. Inputs reach the program only as
-generated files.
+``run_stream``, ``compact``, ``read_table``, ``read_inventory``,
+``stats_inventory``) and ``operators.activity.actor_activity``. Both
+workloads ingest with inventories and CDC stats on, so every batch also
+runs ``operators.cdc_view`` (``ChangelogAggregateView.catch_up``). Inputs
+reach the program only as generated files.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from dataclasses import dataclass, field
 
 import checks
 from gen import Generator, Shape
+from procs import host_steal, steal_pct, tree_cpu_s
 from spans import Tracer
 
 # 1000 gateways and accounts: inventories ~10x a tip batch's updates, so a
@@ -27,28 +30,33 @@ from spans import Tracer
 # archives hold 2 light blocks, as a follower sees them at the tip.
 TIP_SHAPE = Shape(txns_per_block=(20, 60), blocks_per_archive=2, n_accounts=1000, n_gateways=1000)
 # The read lake: the same key space plus 20 blocks of 100-200 txns of
-# history, so activity pages and reward windows return real rows.
+# history, so activity pages return real rows and most reward windows hold
+# the epoch rewards_v1 of block 15 (one reward per gateway and reward type
+# earned in blocks 2-15).
 API_SHAPE = Shape(txns_per_block=(100, 200), blocks_per_archive=20, n_accounts=1000, n_gateways=1000)
 # the tables the API reads; set-up compacts them
 API_TABLES = ("transactions", "transaction_actors", "rewards")
-# The client cycles through this fixed pattern (40% lookups, 20% activity
-# pages, 25% reward windows, 15% SQL counts), so every run, whatever its
-# length, sends the same mix; the seed picks each request's keys.
-API_PATTERN = (
-    "lookup", "rewards", "activity", "lookup", "sql",
-    "lookup", "rewards", "lookup", "activity", "rewards",
-    "lookup", "sql", "lookup", "rewards", "activity",
-    "lookup", "rewards", "lookup", "activity", "sql",
-)
+# The client cycles through this fixed pattern, one request of each kind,
+# and the timed phase ends on a whole cycle, so every run sends the same
+# mix whatever its length; the seed picks each request's keys. The even
+# split is an assumption, not taken from a measured API trace.
+API_PATTERN = ("lookup", "rewards", "activity", "stats", "sql")
 
 
 @dataclass
 class Result:
-    setup_s: float = 0.0
+    setup_s: float = 0.0  # CPU time of the process tree during set-up
+    setup_wall_s: float = 0.0
     op_ms: list = field(default_factory=list)  # per-op latency, timed phase
     items: int = 0  # blocks or requests completed in the timed phase
     busy_s: float = 0.0  # wall time the timed phase spent in the program
-    cpu_s: float = 0.0  # CPU time of the process tree in the timed phase
+    # CPU time of the process tree in the timed phase, JIT compilation
+    # excluded (``jit_s``): the JVM is still compiling hot code paths
+    # during the first batches, which a long-running follower no longer
+    # pays for, and how much it compiles in one batch varies from run to run
+    cpu_s: float = 0.0
+    jit_s: float = 0.0
+    setup_jit_s: float = 0.0
     steal_pct: float = 0.0  # share of the host's CPU time stolen by other guests, timed phase
     input_bytes: int = 0
     attempted: int = 0
@@ -75,8 +83,34 @@ class Workload:
         spark.sparkContext.setLogLevel("ERROR")
         return spark
 
-    def check_lake(self, ing, gen: Generator) -> None:
-        self.res.errors += checks.check_lake(self.lake, gen.expected, ing.sync_height())
+    def ingest(self):
+        from blockchain_etl_spark.streaming.ingest import BlockIngest
+
+        return BlockIngest(self.lake, maintain_inventories=True, maintain_stats=True)
+
+    def start_setup(self) -> None:
+        self._setup0 = (time.time(), tree_cpu_s())
+
+    def end_setup(self) -> None:
+        t0, (cpu0, jit0) = self._setup0
+        cpu, jit = tree_cpu_s()
+        self.res.setup_s, self.res.setup_jit_s = cpu - cpu0, jit - jit0
+        self.res.setup_wall_s = time.time() - t0
+
+    def start_measure(self) -> None:
+        self.tracer.phase = "measure"
+        self._measure0 = (tree_cpu_s(), host_steal())
+
+    def end_measure(self) -> None:
+        (cpu0, jit0), steal0 = self._measure0
+        cpu, jit = tree_cpu_s()
+        self.res.jit_s = jit - jit0
+        self.res.cpu_s = cpu - cpu0 - self.res.jit_s
+        self.res.steal_pct = steal_pct(steal0, host_steal())
+
+    def check_lake(self, spark, ing, gen: Generator) -> None:
+        stats = [r.asDict() for r in ing.stats_inventory(spark).collect()]
+        self.res.errors += checks.check_lake(self.lake, gen.expected, ing.sync_height(), stats)
         self.res.input_bytes = gen.expected.input_bytes
 
 
@@ -94,32 +128,28 @@ class TipFollow(Workload):
         return time.time() - t
 
     def run(self) -> None:
-        from blockchain_etl_spark.streaming.ingest import BlockIngest
-
-        t0 = time.time()
+        self.start_setup()
         spark = self.session()
         gen = Generator(self.seed, TIP_SHAPE)
-        ing = BlockIngest(self.lake, maintain_inventories=True)
+        ing = self.ingest()
         self.follow(spark, ing, gen, gen.genesis())
-        self.res.setup_s = time.time() - t0
+        self.end_setup()
 
-        self.tracer.phase = "measure"
-        cpu0, steal0 = tree_cpu_s(), host_steal()
+        self.start_measure()
         t_start = time.time()
         while time.time() - t_start < self.seconds:
             blocks = gen.archive()
             self.res.busy_s += self.follow(spark, ing, gen, blocks)
             self.res.attempted += 1
             self.res.items += len(blocks)
-        self.res.cpu_s = tree_cpu_s() - cpu0
-        self.res.steal_pct = steal_pct(steal0, host_steal())
+        self.end_measure()
         # foreachBatch commit latency of every timed batch
         self.res.op_ms = [(s.end - s.start) * 1000 for s in self.tracer.named("ingest.process_batch", "measure")]
         if len(self.res.op_ms) != self.res.attempted:
             self.res.errors.append(f"{self.res.attempted} archives landed, {len(self.res.op_ms)} batches ran")
 
         self.tracer.phase = "check"
-        self.check_lake(ing, gen)
+        self.check_lake(spark, ing, gen)
         self.res.failed = self.res.attempted if self.res.errors else 0
         spark.stop()
 
@@ -131,12 +161,11 @@ class ApiReads(Workload):
 
     def run(self) -> None:
         from blockchain_etl_spark.sources.blockchain import SCHEMAS
-        from blockchain_etl_spark.streaming.ingest import BlockIngest
 
-        t0 = time.time()
+        self.start_setup()
         spark = self.session()
         gen = Generator(self.seed, API_SHAPE)
-        ing = BlockIngest(self.lake, maintain_inventories=True)
+        ing = self.ingest()
         gen.write_parquet(self.inbox, gen.genesis() + gen.archive())
         with self.tracer.span("bench.ingest", "bench"):
             ing.run_stream(spark, self.inbox, SCHEMAS["transactions"])
@@ -159,15 +188,14 @@ class ApiReads(Workload):
             }
 
         # one request of each kind warms the read plans before timing
-        for kind in sorted(set(API_PATTERN)):
+        for kind in API_PATTERN:
             request(spark, ing, next_request(kind))
-        self.res.setup_s = time.time() - t0
+        self.end_setup()
 
-        self.tracer.phase = "measure"
         answers = []
-        cpu0, steal0 = tree_cpu_s(), host_steal()
+        self.start_measure()
         t_start = time.time()
-        while time.time() - t_start < self.seconds:
+        while time.time() - t_start < self.seconds or len(answers) % len(API_PATTERN):
             req = next_request(API_PATTERN[len(answers) % len(API_PATTERN)])
             t = time.time()
             with self.tracer.span(f"api.{req['kind']}", "bench"):
@@ -176,12 +204,11 @@ class ApiReads(Workload):
             self.res.op_ms.append(dt * 1000)
             self.res.busy_s += dt
             answers.append((req, rows))
-        self.res.cpu_s = tree_cpu_s() - cpu0
-        self.res.steal_pct = steal_pct(steal0, host_steal())
+        self.end_measure()
         self.res.attempted = self.res.items = len(answers)
 
         self.tracer.phase = "check"
-        self.check_lake(ing, gen)
+        self.check_lake(spark, ing, gen)
         bad = checks.check_answers(self.lake, answers)
         # a wrong lake fails every request; otherwise each wrong answer does
         self.res.failed = self.res.attempted if self.res.errors else len(bad)
@@ -202,6 +229,8 @@ def request(spark, ing, req: dict) -> list[dict]:
         df = activity.actor_activity(
             ing.read_table(spark, "transactions"), ing.read_table(spark, "transaction_actors")
         ).filter(col("actor") == req["account"])
+    elif kind == "stats":
+        df = ing.stats_inventory(spark)
     elif kind == "rewards":
         df = (
             ing.read_table(spark, "rewards")
@@ -214,41 +243,6 @@ def request(spark, ing, req: dict) -> list[dict]:
             f"WHERE block BETWEEN {req['lo']} AND {req['hi']} GROUP BY type"
         )
     return [r.asDict() for r in df.collect()]
-
-
-def tree_cpu_s() -> float:
-    """CPU seconds used so far by this process and all its descendants
-    (the Spark JVM and its Python workers), reaped children included.
-    Unlike wall time, this does not grow when the host takes CPU away."""
-    procs = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue
-        fields = stat[stat.rfind(")") + 2 :].split()
-        # fields[1] = ppid; [11:15] = utime, stime, cutime, cstime
-        procs[int(d)] = (int(fields[1]), sum(int(x) for x in fields[11:15]))
-    tree, frontier = set(), {os.getpid()}
-    while frontier:
-        tree |= frontier
-        frontier = {p for p, (pp, _) in procs.items() if pp in frontier and p not in tree}
-    return sum(procs[p][1] for p in tree if p in procs) / os.sysconf("SC_CLK_TCK")
-
-
-def host_steal() -> tuple[int, int]:
-    """(steal, total) CPU ticks of this host so far, from /proc/stat."""
-    with open("/proc/stat") as f:
-        ticks = [int(x) for x in f.readline().split()[1:]]
-    return ticks[7], sum(ticks)
-
-
-def steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
-    total = after[1] - before[1]
-    return 100.0 * (after[0] - before[0]) / total if total else 0.0
 
 
 def lake_files(lake: str) -> int:
