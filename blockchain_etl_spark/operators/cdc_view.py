@@ -3,12 +3,12 @@ CDC story: a derived per-group aggregate maintained from a
 ParquetMergeTarget's changelog rows ALONE, never re-reading (or even being
 able to read) the source table.
 
-The reference's analog is the trigger-maintained ``stats_inventory`` row
-counts (migrations/1593015009-stats_inventory.sql:11-16): every change to a
-watched table bumps a derived aggregate in the same transaction. Here the
-"trigger" is the changelog stream each ``merge_with(changelog_keys=...)``
-commit emits, and the derived table is versioned/replay-guarded exactly
-like any other merge target.
+The input is the changelog stream each ``merge_with(changelog_keys=...)``
+commit emits (ingest's inventory merges emit one under
+``BlockIngest(maintain_stats=True)``; the CLI ``follow`` command subscribes
+to it), and the derived table is versioned/replay-guarded exactly like any
+other merge target. Plain row counts of a merge target need no view: its
+parquet footers already carry them (``ParquetMergeTarget.fast_count``).
 
 Maintenance algebra: every changelog row expands to weighted contributions
 — ``insert → +after``, ``delete → -before``, ``update → -before +after``

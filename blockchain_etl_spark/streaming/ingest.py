@@ -183,10 +183,8 @@ class BlockIngest:
         # form of the reference's AFTER INSERT inventory triggers.
         self.maintain_inventories = maintain_inventories
         # when on (implies inventories), inventory merges also emit CDC
-        # changelogs and a per-table row-count view follows them — the
-        # reference's trigger-maintained stats_inventory
-        # (migrations/1593015009-stats_inventory.sql:11-16), maintained
-        # from change rows alone instead of COUNT(*) rescans.
+        # changelogs (changelog_keys) for downstream subscribers such as
+        # `follow` / ChangelogAggregateView.
         self.maintain_stats = maintain_stats
         if maintain_stats and not maintain_inventories:
             raise ValueError("maintain_stats requires maintain_inventories")
@@ -279,18 +277,6 @@ class BlockIngest:
                         watermark=int(bounds.hi),
                         changelog_keys=keys if self.maintain_stats else None,
                     )
-                if self.maintain_stats:
-                    for name in ("accounts", *INVENTORIES):
-                        # catch_up, not fold: enabling maintain_stats on a
-                        # directory whose inventories already merged
-                        # versions WITHOUT changelog_keys (or whose
-                        # vacuum() outran the view) must seed the view
-                        # from a one-time snapshot count — a bare fold()
-                        # raises on the missing changelog segment and
-                        # wedges ingestion.
-                        self._stats_view(name).catch_up(
-                            batch.sparkSession, self.inventory_target(name)
-                        )
             if bounds.hi > stored:
                 self._write_sync_height(bounds.hi)
         finally:
@@ -301,32 +287,19 @@ class BlockIngest:
 
         return ParquetMergeTarget(os.path.join(self.out_dir, f"{name}_inventory"))
 
-    def _stats_view(self, name: str):
-        """Per-inventory CDC-maintained row count (empty group = one global
-        row), versioned/replay-guarded like everything else."""
-        from ..operators.cdc_view import ChangelogAggregateView
-
-        return ChangelogAggregateView(
-            os.path.join(self.out_dir, "stats", name), group_keys=()
-        )
-
     def stats_inventory(self, spark: SparkSession) -> DataFrame:
         """The reference's ``stats_inventory`` rows — (name, value) row
-        counts per inventory table — maintained from CDC changelogs alone
-        (migrations/1593015009-stats_inventory.sql:11-16: each change to a
-        watched table bumps the stat in-transaction; here the changelog
-        fold in process_batch plays the trigger). Never scans an
-        inventory: each read is a 1-row view lookup per table."""
-        rows = []
-        for name in ("accounts", *INVENTORIES):
-            v = self._stats_view(name).read(spark)
-            n = 0
-            if v is not None:
-                got = v.collect()
-                n = int(got[0].n_rows) if got else 0
-            rows.append((f"{name}_inventory", n))
+        counts per inventory table (migrations/1593015009-stats_inventory
+        .sql:11-16 keeps them current with triggers). Each inventory commit
+        already records its exact row count in its parquet footers, so the
+        counts are read off the committed version readers see — exact after
+        every batch and replay, and no Spark job."""
         from ..functions.localframe import local_df
 
+        rows = [
+            (f"{name}_inventory", self.inventory_target(name).fast_count() or 0)
+            for name in ("accounts", *INVENTORIES)
+        ]
         return local_df(spark, rows, "name string, value bigint")
 
     def read_inventory(self, spark: SparkSession, name: str) -> DataFrame:

@@ -41,3 +41,23 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def spark_result(spark):
+    """Spark output of a registered query at SF_DIR as pandas, computed
+    once per session. test_oracle (values) and test_oracle_dtypes (dtype
+    classes) check the same ~200 outputs, and the second run of every
+    query cost about 175 s of the suite on 4 cores. Each call returns a
+    fresh copy."""
+    from blockchain_etl_spark.plans.registry import QUERIES, get_queries
+
+    get_queries()
+    memo = {}
+
+    def get(name):
+        if name not in memo:
+            memo[name] = QUERIES[name].fn(spark, SF_DIR).toPandas()
+        return memo[name].copy()
+
+    return get

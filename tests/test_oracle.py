@@ -40,9 +40,9 @@ def _values_equal(a, b) -> bool:
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark_result, duck, name):
     q = QUERIES[name]
-    spark_pdf = q.fn(spark, SF_DIR).toPandas()
+    spark_pdf = spark_result(name)
     duck_pdf = duck.execute(q.sql).fetchdf()
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (

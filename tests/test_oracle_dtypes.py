@@ -46,8 +46,8 @@ def con():
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_dtype_classes_match(name, spark, con):
-    sdf = QUERIES[name].fn(spark, SF_DIR).toPandas()
+def test_dtype_classes_match(name, spark_result, con):
+    sdf = spark_result(name)
     odf = con.execute(QUERIES[name].sql).df()
     assert sorted(sdf.columns) == sorted(odf.columns), name
     mismatches = {
